@@ -7,7 +7,7 @@ import graft.extract.Extract
 import graft.materialize.Materialize
 import graft.mentions.Mentions
 import graft.model.Gazetteer
-import graft.relations.Relations
+import graft.pipeline.Pipeline
 import graft.sources.Pages
 import graft.streaming.{Recanon, Streaming}
 
@@ -26,10 +26,13 @@ import graft.streaming.{Recanon, Streaming}
   * }}}
   *
   * Subcommands wire the lambda architecture end to end:
-  *  - `batch`: pages table → mentions → canonical map → co-occurrence +
-  *    provenance triples, materialized bucket-partitioned with lineage
-  *    resume ([[Materialize.writeTriples]]); `--canon-out` also writes the
-  *    alias table the stream job consumes as its snapshot.
+  *  - `batch`: pages table → mentions (clustered by url) → canon state →
+  *    co-occurrence + provenance triples through the flagship's own
+  *    dispatch ([[graft.pipeline.Pipeline.triplesOf]]), materialized
+  *    bucket-partitioned with lineage resume ([[Materialize.writeTriples]]);
+  *    `--canon-out` also writes the alias table the stream job consumes as
+  *    its snapshot. A dimension inside [[Canon.DriverGate]] is
+  *    canonicalized on the driver ([[Canon.canonicalState]]).
   *  - `stream`: the fused micro-batch flagship over a page feed directory
   *    ([[Streaming]]), checkpoint-resumable, with the materialized
   *    lineage+metrics sink. `--canon` points at a prior batch run's alias
@@ -163,24 +166,36 @@ object Submit {
       case other   => throw new IllegalArgumentException(s"unknown --bucket-by '$other' (hash|docid)")
     }
 
-  /** The batch flagship over an explicit page table: ONE cached mention
-    * scan feeds both triple families and the canonical map (the same memo
-    * discipline Pipeline uses, scoped to this invocation). */
+  /** The batch flagship over an explicit page table, on the same code path
+    * as the benchmarked flagship ([[Pipeline.triplesOf]]). ONE cached
+    * mention scan, clustered by url on the way into the cache (one
+    * mention-level exchange, each url's rows adjacent and segment-ordered),
+    * so the contiguous triples form holds for any input: a url repeated
+    * within or across input partitions gives the shuffle form's triples,
+    * never duplicates. The canon state is computed once and feeds both
+    * `--canon-out` and the triples. The summary line also records which
+    * canon path ran (driver or distributed) and which triples form
+    * (contiguous or shuffle). */
   private def runBatch(spark: SparkSession, opts: Map[String, String]): Unit = {
+    import org.apache.spark.sql.functions.col
     val gaz = gazetteerOf(spark, opts)
     val nBuckets = opts.getOrElse("buckets", "16").toInt
     val ms = Mentions.scanWithRecall(
-      Extract.segments(Pages.fromParquet(spark, req(opts, "input"))), gaz).cache()
+        Extract.segments(Pages.fromParquet(spark, req(opts, "input"))), gaz)
+      .repartition(col("url"))
+      .sortWithinPartitions(col("url"), col("page"), col("seg_no"))
+      .cache()
     try {
-      val canon = Canon.canonicalMap(ms)
-      opts.get("canon-out").foreach(p => canon.write.mode("overwrite").parquet(p))
-      val triples = Relations.cooccurrence(ms)
-        .unionByName(Relations.mentionedIn(ms, canon))
+      val canon = Canon.canonicalState(ms)
+      opts.get("canon-out").foreach(p => canon.canonMap.write.mode("overwrite").parquet(p))
+      val (triples, contiguous) = Pipeline.triplesOf(ms, canon)
       val rows = Materialize.writeTriples(triples, req(opts, "output"),
         nBuckets = nBuckets, batchId = opts.getOrElse("batch-id", "0").toLong,
         bucketOf = bucketSchemeOf(opts))
       println(s"[submit] batch: wrote ${rows.map(_.n_rows).sum} triples " +
-        s"across ${rows.size} new buckets (${nBuckets - rows.size} resumed)")
+        s"across ${rows.size} new buckets (${nBuckets - rows.size} resumed); " +
+        s"canon ${if (canon.driverMap.isDefined) "driver" else "distributed"}, " +
+        s"triples ${if (contiguous) "contiguous" else "shuffle"}")
     } finally ms.unpersist()
   }
 

@@ -1,7 +1,8 @@
 package graft.canon
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.sql.expressions.Window
 import graft.model.{Config, Mention}
 import graft.functions.expressions.unaccent
@@ -137,6 +138,17 @@ object Canon {
       .select(col("a"), col("b"))
   }
 
+  /** The driver gate: the size up to which a canon dimension is solved in
+    * plain Scala on the driver instead of as Spark stages. The CC loop's
+    * union-find fast path takes graphs of at most this many vertices AND
+    * edges; [[canonicalState]] takes the whole job (blocking, verification,
+    * union-find, pick) there when the surface table has at most this many
+    * rows AND its candidate bound Σ C(df, 2) over cold tokens is at most
+    * this many pairs. Below it, each Spark stage of the distributed
+    * formulation costs a scheduler round trip that dwarfs the work.
+    */
+  val DriverGate = 100000L
+
   /** Connected components over an undirected string-keyed edge list, pure
     * DataFrame iteration (no GraphX — north_rule). Distributed path:
     * alternating large-star/small-star rounds (Kiveris et al., "Connected
@@ -154,7 +166,7 @@ object Canon {
     * and silently corrupt every downstream canonical map via join fan-out).
     */
   def connectedComponents(vertices: DataFrame, edges: DataFrame, maxIter: Int = 60,
-      localThreshold: Long = 100000L, hubDegree: Long = 1024L): DataFrame =
+      localThreshold: Long = DriverGate, hubDegree: Long = 1024L): DataFrame =
     connectedComponentsWithRounds(vertices, edges, maxIter, localThreshold, hubDegree)._1
 
   /** [[connectedComponents]] plus the number of distributed rounds executed
@@ -162,7 +174,7 @@ object Canon {
     * is spec-assertable (CanonSpec chain-graph case).
     */
   def connectedComponentsWithRounds(vertices: DataFrame, edges: DataFrame,
-      maxIter: Int = 60, localThreshold: Long = 100000L,
+      maxIter: Int = 60, localThreshold: Long = DriverGate,
       hubDegree: Long = 1024L, bcastBound: Long = 1000000L): (DataFrame, Int) = {
     // Materialize the (possibly expensive — e.g. a banded similarity
     // self-join) edge input ONCE: the size gate, the local collect()/first
@@ -529,6 +541,19 @@ object Canon {
     import spark.implicits._
     val vs = vertices.select(col("surface")).as[String].collect()
     val es = edges.select(col("a"), col("b")).as[(String, String)].collect()
+    unionFind(vs, es).toDF("surface", "component")
+  }
+
+  /** Spark's string order (UTF-8 bytes, unsigned) — not Java's UTF-16
+    * order, which differs once supplementary-plane characters appear. */
+  private def sparkLt(a: String, b: String): Boolean =
+    UTF8String.fromString(a).compareTo(UTF8String.fromString(b)) < 0
+
+  /** The union-find behind both driver paths ([[ccLocal]] and the driver
+    * branch of [[canonicalState]]): (vertex, component) in vertex order,
+    * component = the Spark-order minimum member. Edges with an endpoint
+    * outside `vs` are ignored. */
+  private def unionFind(vs: Array[String], es: Iterable[(String, String)]): Seq[(String, String)] = {
     val parent = scala.collection.mutable.HashMap(vs.map(v => v -> v): _*)
     def find(x: String): String = {
       var r = x
@@ -547,9 +572,9 @@ object Canon {
     vs.foreach { v =>
       val r = find(v)
       val cur = minOf.get(r)
-      if (cur.isEmpty || v < cur.get) minOf(r) = v
+      if (cur.isEmpty || sparkLt(v, cur.get)) minOf(r) = v
     }
-    vs.toSeq.map(v => (v, minOf(find(v)))).toDF("surface", "component")
+    vs.toSeq.map(v => (v, minOf(find(v))))
   }
 
   /** Deterministic canonical representative per component: most words, then
@@ -588,27 +613,97 @@ object Canon {
     * dimension ([[surfaceStats]] schema) and the alias map it produced.
     * Both are dimension-sized (one row per distinct PERSON surface) — in a
     * production deployment they live as parquet tables between refreshes.
+    * `driverMap` is the same alias map as a driver map when the full job
+    * solved the dimension on the driver, None otherwise.
     */
-  final case class CanonState(stats: DataFrame, canonMap: DataFrame)
+  final case class CanonState(stats: DataFrame, canonMap: DataFrame,
+      driverMap: Option[Map[String, String]] = None)
 
   /** Refresh outcome: the new carried state and whether the exactness
     * guard forced a full recompute.
     */
   final case class CanonRefresh(state: CanonState, fellBack: Boolean)
 
-  /** Full canon job, returning the carry-forward [[CanonState]]. Runs from
-    * whatever `mentions` plan the caller hands in — callers that take
-    * multiple actions over the result (e.g. `Submit refresh` writing both
-    * state tables) should cut the mention scan first
-    * (`GraftSqlShims.localCheckpointFreshLazy`), as
-    * [[canonicalMapIncremental]] does on `merged`.
+  /** Full canon job, returning the carry-forward [[CanonState]]. The
+    * surface table is cut once and collected up to [[DriverGate]] + 1 rows.
+    * A dimension inside the gate is solved on the driver ([[driverCanon]],
+    * `driverMap` set): no Spark work past the aggregate that builds the
+    * surface table. Otherwise the cut stats feed
+    * [[similarityEdges]] → [[connectedComponentsWithRounds]] →
+    * [[canonicalPick]], whose result is cut too, so a caller that both
+    * writes and snapshots the map computes it once. Either way the mention
+    * plan is read by one aggregate.
     */
   def canonicalState(mentions: Dataset[Mention],
       maxBlock: Long = Config.MaxTokenBlock): CanonState = {
-    val stats = surfaceStats(mentions)
-    val comps = connectedComponents(stats.select("surface"),
-      similarityEdges(stats, maxBlock))
-    CanonState(stats, canonicalPick(stats, comps))
+    val ck = org.apache.spark.sql.GraftSqlShims.localCheckpointFreshLazy _
+    val stats = ck(surfaceStats(mentions))
+    val rows = stats.limit(DriverGate.toInt + 1).collect()
+    (if (rows.length <= DriverGate) driverCanon(rows, maxBlock) else None) match {
+      case Some(m) =>
+        val spark = stats.sparkSession
+        import spark.implicits._
+        // one partition, as the distributed pick's coalesced output: a local
+        // relation splits into defaultParallelism slices, i.e. that many
+        // files when written and that many tasks on every later read
+        CanonState(stats, m.toSeq.toDF("surface", "canonical").coalesce(1), Some(m))
+      case None =>
+        val comps = connectedComponents(stats.select("surface"),
+          similarityEdges(stats, maxBlock))
+        CanonState(stats, ck(canonicalPick(stats, comps)))
+    }
+  }
+
+  /** The full canon job in plain Scala over the collected [[surfaceStats]]
+    * rows — equal to the distributed formulation row for row: the collected
+    * `words` are Spark's split/array_distinct; blocking keeps tokens held by
+    * at most `maxBlock` surfaces; verification is [[similarityEdges]]'
+    * predicate on `UTF8String` (levenshteinDistance, numChars); components
+    * come from [[unionFind]]; the pick ranks like [[canonicalPick]] (words
+    * of `split(surface, " ")`, numChars, mentions, then Spark's string
+    * order). None when the candidate bound Σ C(df, 2) over cold tokens
+    * exceeds [[DriverGate]].
+    */
+  private def driverCanon(rows: Array[Row], maxBlock: Long): Option[Map[String, String]] = {
+    import scala.collection.mutable
+    // a null surface never survives the pick's equi-joins
+    val live = rows.filter(r => !r.isNullAt(r.fieldIndex("surface")))
+    val surface = live.map(_.getAs[String]("surface"))
+    val words = live.map(r => r.getSeq[String](r.fieldIndex("words")).toSet)
+    val blocks = mutable.HashMap.empty[String, mutable.ArrayBuffer[Int]]
+    for (i <- live.indices; w <- words(i)) blocks.getOrElseUpdate(w, mutable.ArrayBuffer.empty) += i
+    val cold = blocks.values.filter(_.size <= maxBlock)
+    if (cold.iterator.map(b => b.size.toLong * (b.size - 1) / 2).sum > DriverGate) return None
+
+    val key = live.map(r => UTF8String.fromString(r.getAs[String]("sim_key")))
+    val keyLen = key.map(_.numChars)
+    def similar(i: Int, j: Int): Boolean =
+      key(i) == key(j) ||
+        1.0 - key(i).levenshteinDistance(key(j)).toDouble /
+          math.max(keyLen(i), keyLen(j)).toDouble > Config.LevRatioThreshold ||
+        words(i).count(words(j).contains).toDouble /
+          math.max(words(i).size, words(j).size).toDouble >= Config.WordOverlapThreshold
+    val seen = mutable.HashSet.empty[Long]
+    val edges = mutable.ArrayBuffer.empty[(String, String)]
+    for (b <- cold; x <- b.indices; y <- x + 1 until b.size) {
+      val (i, j) = (b(x), b(y))
+      if (seen.add(i.toLong * live.length + j) && similar(i, j)) edges += ((surface(i), surface(j)))
+    }
+
+    val utf8 = surface.map(UTF8String.fromString)
+    val nWords = utf8.map(_.split(UTF8String.fromString(" "), -1).length)
+    val nMentions = live.map(_.getAs[Long]("n_mentions"))
+    def outranks(i: Int, j: Int): Boolean =
+      if (nWords(i) != nWords(j)) nWords(i) > nWords(j)
+      else if (utf8(i).numChars != utf8(j).numChars) utf8(i).numChars > utf8(j).numChars
+      else if (nMentions(i) != nMentions(j)) nMentions(i) > nMentions(j)
+      else utf8(i).compareTo(utf8(j)) > 0
+    val comps = unionFind(surface, edges)
+    val best = mutable.HashMap.empty[String, Int]
+    comps.iterator.zipWithIndex.foreach { case ((_, c), i) =>
+      if (best.get(c).forall(outranks(i, _))) best(c) = i
+    }
+    Some(comps.iterator.map { case (s, c) => s -> surface(best(c)) }.toMap)
   }
 
   /** Merge the carried stats dimension with a delta batch's stats: mention

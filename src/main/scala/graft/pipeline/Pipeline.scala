@@ -60,15 +60,20 @@ object Pipeline {
       clustered.cache()
     })
 
-  // Canonical alias map is dimension-sized but costs a CC fixpoint loop —
-  // memoize it too (q_canon / q_entity_prov / q_eval_pairs / q_lineage all
-  // consume it).
+  // Canonical alias map is dimension-sized but costs a canon job — memoize
+  // the state too (q_canon / q_entity_prov / q_eval_pairs / q_lineage and
+  // the triples all consume it).
   private val canonMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Canon.CanonState]()
+
+  private def canonStateCached(spark: SparkSession, sfDir: String): Canon.CanonState =
+    canonMemo.computeIfAbsent((spark, sfDir), _ => {
+      val st = Canon.canonicalState(mentionsCached(spark, sfDir))
+      st.copy(canonMap = st.canonMap.cache())
+    })
 
   def canonCached(spark: SparkSession, sfDir: String): DataFrame =
-    canonMemo.computeIfAbsent((spark, sfDir),
-      _ => Canon.canonicalMap(mentionsCached(spark, sfDir)).cache())
+    canonStateCached(spark, sfDir).canonMap
 
   /** Unpersist and drop both memo entries for (spark, sfDir). The memos are
     * correct for one-shot Verify/Bench processes, but hold cached Datasets
@@ -80,42 +85,29 @@ object Pipeline {
   def evict(spark: SparkSession, sfDir: String): Unit = {
     val key = (spark, sfDir)
     Option(mentionMemo.remove(key)).foreach(_.unpersist())
-    Option(canonMemo.remove(key)).foreach(_.unpersist())
+    Option(canonMemo.remove(key)).foreach(_.canonMap.unpersist())
   }
 
-  /** All triples: segment co-occurrence + canonical provenance. The scan
-    * output is segment- and url-contiguous, so BOTH legs run shuffle-free
-    * over the cached mentions when the alias dimension fits the driver
-    * ([[Relations.cooccurrenceContiguous]] / [[Relations.mentionedInContiguous]]
-    * — loud guards on violation; the oversized-dimension branch keeps the
-    * broadcast-join + distinct form). */
-  def triples(spark: SparkSession, sfDir: String): Dataset[Triple] = {
-    val ms = mentionsCached(spark, sfDir)
-    val canonDf = canonCached(spark, sfDir)
-    Canon.snapshotBounded(canonDf) match {
-      case Canon.AliasMap(m, _) => Relations.triplesContiguous(ms, m)
-      case _ => Relations.cooccurrenceContiguous(ms)
-        .unionByName(Relations.mentionedIn(ms, canonDf))
-    }
-  }
-
-  /** Bench-only flagship over an amplified corpus (factor deterministic
-    * copies of every page, distinct urls): at the sandbox SFs the raw corpus
-    * is KBs per partition and driver fixed costs dominate, which would make
-    * any parallelism measurement meaningless; amplification restores a
-    * data-proportional extract→scan→shuffle profile. No memoization — this
-    * path must pay full cost every run.
+  /** The flagship triples dispatch — [[triples]], [[flagshipChecksum]]
+    * and `Submit batch` all go through it. An alias map that fits the
+    * driver ([[Canon.AliasMap]]) runs BOTH legs as one fused pass over the
+    * mentions ([[Relations.triplesContiguous]]); an oversized dimension
+    * keeps the shuffle-free co-occurrence and the broadcast-join + distinct
+    * provenance. Either way `ms` must be url- and segment-contiguous (loud
+    * guards on violation). A state solved on the driver brings its map
+    * along, so only a distributed one pays the [[Canon.snapshotBounded]]
+    * aggregate. Returns the triples and whether the contiguous form ran.
     */
-  def triplesAmplified(spark: SparkSession, sfDir: String, factor: Int): Dataset[Triple] = {
-    val pages = Pages.synthesizeAmplified(spark, sfDir, factor)
-    val ms = Mentions.scanWithRecall(Extract.segments(pages), Gazetteer.all.toArray).cache()
-    val canonDf = Canon.canonicalMap(ms)
-    Canon.snapshotBounded(canonDf) match {
-      case Canon.AliasMap(m, _) => Relations.triplesContiguous(ms, m)
-      case _ => Relations.cooccurrenceContiguous(ms)
-        .unionByName(Relations.mentionedIn(ms, canonDf))
+  def triplesOf(ms: Dataset[Mention], canon: Canon.CanonState): (Dataset[Triple], Boolean) =
+    canon.driverMap.fold(Canon.snapshotBounded(canon.canonMap))(Canon.AliasMap(_)) match {
+      case Canon.AliasMap(m, _) => (Relations.triplesContiguous(ms, m), true)
+      case _ => (Relations.cooccurrenceContiguous(ms)
+        .unionByName(Relations.mentionedIn(ms, canon.canonMap)), false)
     }
-  }
+
+  /** All triples over the memoized mention scan and canon state. */
+  def triples(spark: SparkSession, sfDir: String): Dataset[Triple] =
+    triplesOf(mentionsCached(spark, sfDir), canonStateCached(spark, sfDir))._1
 
   /** Terminal flagship action for benchmarking: counts the amplified triples
     * and unpersists the run's mention cache afterwards, so repeated reps in
@@ -151,15 +143,7 @@ object Pipeline {
       gazetteer: Array[(String, String)] = Gazetteer.all.toArray): (Long, Long) = {
     val pages = Pages.synthesizeAmplified(spark, sfDir, factor)
     val ms = Mentions.scanWithRecall(Extract.segments(pages), gazetteer).cache()
-    try {
-      val canonDf = Canon.canonicalMap(ms)
-      val triples = Canon.snapshotBounded(canonDf) match {
-        // one fused pass over the cached mentions for BOTH legs
-        case Canon.AliasMap(m, _) => Relations.triplesContiguous(ms, m)
-        case _ => Relations.cooccurrenceContiguous(ms)
-          .unionByName(Relations.mentionedIn(ms, canonDf))
-      }
-      tripleChecksum(triples.toDF())
-    } finally ms.unpersist()
+    try tripleChecksum(triplesOf(ms, Canon.canonicalState(ms))._1.toDF())
+    finally ms.unpersist()
   }
 }

@@ -216,6 +216,62 @@ class CanonSpec extends SparkSpec {
   private def asMap(df: org.apache.spark.sql.DataFrame): Map[String, String] =
     df.collect().map(r => r.getAs[String]("surface") -> r.getAs[String]("canonical")).toMap
 
+  // --- the full job's driver branch ---------------------------------------
+
+  /** The distributed formulation of the full job, forced past every
+    * driver gate: the reference the driver branch must equal. */
+  private def distributedCanon(ms: org.apache.spark.sql.Dataset[graft.model.Mention],
+      maxBlock: Long): Map[String, String] = {
+    val stats = Canon.surfaceStats(ms)
+    asMap(Canon.canonicalPick(stats, Canon.connectedComponents(stats.select("surface"),
+      Canon.similarityEdges(stats, maxBlock), localThreshold = 0)))
+  }
+
+  /** Each surface named `n` times (n_mentions = n). */
+  private def named(counts: Seq[(String, Int)]) =
+    mkMentions(counts.flatMap { case (s, n) => Seq.fill(n)(s) })
+
+  test("driver canon equals the distributed job: accents, case, spaces, empty keys, caps, UTF-8 order, ties") {
+    // U+FF21 sorts after a surrogate pair in UTF-16 but before U+1D49C in
+    // UTF-8: the three 12-char Lovelace variants tie on words, length and
+    // mentions, so only Spark's byte order picks the same representative.
+    val lovelace = Seq("Ada Lovelace", "\uFF21da Lovelace", "\uD835\uDC9Cda Lovelace")
+    val cases: Seq[(String, Seq[(String, Int)], Long)] = Seq(
+      ("accents and case", Seq("María Elena Vásquez" -> 2, "Maria Elena Vasquez" -> 2,
+        "MARIA ELENA VASQUEZ" -> 1, "maria elena vasquez" -> 3, "Elena Vasquez" -> 5), 1000L),
+      ("repeated and trailing spaces", Seq("John  Smith" -> 1, "John Smith " -> 1,
+        " John Smith" -> 1, "John Smith" -> 1, "John   Smith  Jr" -> 2), 1000L),
+      ("empty sim_key", Seq("" -> 1, "\u0301" -> 1, "  " -> 2, "Al  Green" -> 1), 1000L),
+      // cap 3: "alpha" is held by exactly 3 surfaces (a block), "beta" by 4 (dropped)
+      ("token block at and over the cap", Seq("alpha one" -> 1, "alpha two" -> 1,
+        "alpha three" -> 1, "beta uno" -> 1, "beta dos" -> 1, "beta tres" -> 1,
+        "beta cuatro" -> 1, "betaa cuatro" -> 1), 3L),
+      ("supplementary-plane ties", lovelace.map(_ -> 1), 1000L))
+    val rnd = new scala.util.Random(7)
+    val frags = Seq("jo", "ann", "é", "E", " ", "  ", "\uD835\uDC9C", "\uFF21", "smith", "de", "x")
+    val random = (1 to 3).map { k =>
+      (s"random dimension $k", Seq.fill(60)(Seq.fill(1 + rnd.nextInt(5))(frags(rnd.nextInt(frags.size))).mkString)
+        .distinct.map(_ -> (1 + rnd.nextInt(3))), 4L + k)
+    }
+    (cases ++ random).foreach { case (what, counts, cap) =>
+      val ms = named(counts)
+      val st = Canon.canonicalState(ms, maxBlock = cap)
+      assert(st.driverMap.isDefined, s"$what: expected the driver branch")
+      val expected = distributedCanon(ms, cap)
+      assert(st.driverMap.get == expected, s"$what: driver map diverged")
+      assert(asMap(st.canonMap) == expected, s"$what: canon frame diverged")
+    }
+  }
+
+  test("a dimension over the candidate bound takes the distributed branch with the same result") {
+    // 450 surfaces share the cold token "common": Σ C(df, 2) = 101,025 > DriverGate
+    val surfaces = (0 until 450).map(i => f"Name$i%03d Common")
+    val ms = named(surfaces.map(_ -> 1))
+    val st = Canon.canonicalState(ms)
+    assert(st.driverMap.isEmpty, "expected the distributed branch")
+    assert(asMap(st.canonMap) == distributedCanon(ms, graft.model.Config.MaxTokenBlock))
+  }
+
   test("incremental refresh equals the full job across url-hash splits of the live corpus") {
     import org.apache.spark.sql.functions._
     val ms = Pipeline.mentionsCached(spark, sfTiny)

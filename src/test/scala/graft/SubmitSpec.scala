@@ -50,6 +50,57 @@ class SubmitSpec extends SparkSpec {
     assert(spark.read.parquet(s"$out/_lineage").count() == lineageRowsBefore)
   }
 
+  /** Spark jobs started while `body` runs. */
+  private def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = n.incrementAndGet()
+    }
+    org.apache.spark.TestShims.drainListenerBus(sc)
+    sc.addSparkListener(l)
+    try { body; org.apache.spark.TestShims.drainListenerBus(sc) }
+    finally sc.removeSparkListener(l)
+    n.get
+  }
+
+  test("submit batch --canon-out stays within its Spark job budget") {
+    // Before the canon job solved small dimensions on the driver and the
+    // batch ran the fused contiguous triples, this call started 33 Spark
+    // jobs on the tiny corpus (the canon chain, a second canon pass for
+    // the broadcast alias map, the shuffle-form triples). The budget is
+    // half of that, so a job-count regression fails here.
+    val out = scratch("graft-submit-jobs")
+    val jobs = jobsDuring(Submit.run(spark, Array("batch", "--input", pagesDir,
+      "--output", s"$out/sink", "--canon-out", s"$out/alias")))
+    assert(jobs <= 33 / 2, s"Submit batch ran $jobs Spark jobs")
+  }
+
+  test("submit batch over repeated urls equals the shuffle form, within and across input partitions") {
+    val dir = scratch("graft-submit-dup")
+    val pages = spark.read.parquet(pagesDir).as[graft.model.Page].collect()
+    val Array(a, b, c, d) = pages.take(4)
+    // url a twice in the first file (its second copy carries b's page),
+    // url c once in each file; each small file is its own input partition
+    (pages.toSeq :+ a.copy(html = b.html, text = b.text)).toDS().coalesce(1)
+      .write.parquet(s"$dir/pages")
+    Seq(c.copy(html = d.html, text = d.text)).toDS().coalesce(1)
+      .write.mode("append").parquet(s"$dir/pages")
+    val input = spark.read.parquet(s"$dir/pages")
+    assert(input.rdd.getNumPartitions == 2)
+    assert(input.filter(col("url") === c.url).select(spark_partition_id()).distinct().count() == 2)
+
+    val out = scratch("graft-submit-dup-sink")
+    Submit.run(spark, Array("batch", "--input", s"$dir/pages", "--output", out))
+    val ms = graft.mentions.Mentions.scanWithRecall(graft.extract.Extract.segments(
+      graft.sources.Pages.fromParquet(spark, s"$dir/pages")), graft.model.Gazetteer.all.toArray).cache()
+    try {
+      val shuffleForm = graft.relations.Relations.cooccurrence(ms)
+        .unionByName(graft.relations.Relations.mentionedIn(ms, graft.canon.Canon.canonicalMap(ms)))
+      assert(sinkChecksum(out) == Pipeline.tripleChecksum(shuffleForm.toDF()))
+    } finally ms.unpersist()
+  }
+
   test("lambda wiring: batch --canon-out feeds stream --canon; stream sink equals the batch flagship") {
     val out = scratch("graft-submit-lambda")
     Submit.run(spark, Array("batch", "--input", pagesDir,
