@@ -431,9 +431,9 @@ object SparkEntry {
       // the DataFrame and the sink would join (same output either way,
       // StreamingSpec pins the equivalence on a forced join branch).
       val canon = graft.canon.Canon.snapshotBounded(Pipeline.canonCached(s, dir))
-      graft.streaming.Streaming.runTriplesStreamMaterialized(s, in, out, ckpt,
+      graft.streaming.Streaming.startTriplesStreamMaterialized(s, in, out, ckpt,
         graft.model.Gazetteer.all.toArray, canon, maxFilesPerTrigger = 1,
-        nBuckets = 16)
+        nBuckets = 16).awaitTermination()
       // Guard the table read like the sidecars: a drain that commits zero
       // batches (or only empty ones) leaves the dir missing, and parquet
       // schema inference would throw — fall back to an empty triple table
@@ -483,8 +483,9 @@ object SparkEntry {
       val canonDf = Pipeline.canonCached(s, dir)
       val staleSnapshot = graft.canon.Canon.snapshot(canonDf)
         .keysIterator.map(k => k -> k).toMap
-      graft.streaming.Streaming.runTriplesStreamMaterialized(s, in, out, ckpt,
-        graft.model.Gazetteer.all.toArray, staleSnapshot)
+      graft.streaming.Streaming.startTriplesStreamMaterialized(s, in, out, ckpt,
+        graft.model.Gazetteer.all.toArray, graft.canon.Canon.AliasMap(staleSnapshot))
+        .awaitTermination()
       val report = Recanon.recanonicalize(s, out, canonDf)
       require(report.batchesRewritten.nonEmpty,
         "stale drain must trigger at least one batch rewrite")

@@ -9,7 +9,13 @@ import org.apache.spark.sql.SparkSession
   *
   *  - `drain` (default): the whole feed is pre-staged and drained with
   *    Trigger.AvailableNow — peak drain throughput, min of
-  *    SPARK_GRAFT_STREAM_REPS reps into fresh sink+checkpoint dirs.
+  *    SPARK_GRAFT_STREAM_REPS reps into fresh sink+checkpoint dirs. The
+  *    drain runs through the materialized sink, so each micro-batch also
+  *    pays its lineage/metrics/alias sidecar writes; its
+  *    `stream_triples_per_sec` therefore does not compare with the r4/r5
+  *    records (`r4_stream_flagship*.json`, `r4_stream_scaling_*.json`,
+  *    `r5_stream_drain_32c.json`, `stream_drain_last.json` under BENCH),
+  *    which timed a plain parquet sink without sidecars.
   *  - `paced`: the feed dir starts EMPTY and a feeder thread lands files on
   *    a fixed cadence while the query runs on a ProcessingTime trigger —
   *    steady-state ingest. Reported: per-micro-batch wall-time percentiles
@@ -140,11 +146,13 @@ object StreamBench {
     val repTimes = (1 to reps).map { r =>
       val out = s"$tmp/sink$r"; val ckpt = s"$tmp/ckpt$r"
       val t0 = System.nanoTime()
-      graft.streaming.Streaming.runTriplesStreamOnce(
-        spark, in, out, ckpt, gaz, canon, maxFilesPerTrigger = perTrigger)
+      graft.streaming.Streaming.startTriplesStreamMaterialized(spark, in, out, ckpt,
+        gaz, graft.canon.Canon.AliasMap(canon), maxFilesPerTrigger = perTrigger)
+        .awaitTermination()
       val sec = (System.nanoTime() - t0) / 1e9
-      val (streamed, streamSum) =
-        graft.pipeline.Pipeline.tripleChecksum(spark.read.parquet(out))
+      val (streamed, streamSum) = graft.pipeline.Pipeline.tripleChecksum(
+        spark.read.parquet(s"$out/triples")
+          .select("subj", "pred", "obj", "url", "score"))
       require(streamed == nTriples && streamSum == batchSum,
         s"stream sink fingerprint ($streamed, $streamSum) != batch flagship " +
           s"($nTriples, $batchSum)")
@@ -176,8 +184,9 @@ object StreamBench {
     // alias parquet (Submit's --canon-out → compact --canon flow).
     val aliasTable = spark.read.parquet(aliasPath)
     val t0d = System.nanoTime()
-    graft.streaming.Streaming.runTriplesStreamMaterialized(spark, in, out,
-      ckpt, gaz, graft.canon.Canon.AliasNone, perTrigger, 16)
+    graft.streaming.Streaming.startTriplesStreamMaterialized(spark, in, out,
+      ckpt, gaz, graft.canon.Canon.AliasNone, maxFilesPerTrigger = perTrigger)
+      .awaitTermination()
     val drainSec = (System.nanoTime() - t0d) / 1e9
     val t0 = System.nanoTime()
     val report = graft.streaming.Recanon.recanonicalize(spark, out, aliasTable)
@@ -229,8 +238,8 @@ object StreamBench {
     spark.streams.addListener(listener)
     val t0 = System.nanoTime()
     val q = graft.streaming.Streaming.startTriplesStreamMaterialized(
-      spark, in, out, ckpt, gaz, canon, maxFilesPerTrigger = perTrigger,
-      nBuckets = 16, trigger = Trigger.ProcessingTime(triggerMs))
+      spark, in, out, ckpt, gaz, graft.canon.Canon.AliasMap(canon),
+      trigger = Trigger.ProcessingTime(triggerMs), maxFilesPerTrigger = perTrigger)
     val feeder = new Thread(() => {
       parts.grouped(filesPerTick).foreach { g =>
         // Land each file ATOMICALLY (copy to a dot-prefixed temp name the

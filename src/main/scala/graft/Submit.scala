@@ -209,25 +209,20 @@ object Submit {
       case None => Canon.AliasNone
     }
     val (in, out, ckpt) = (req(opts, "input"), req(opts, "output"), req(opts, "checkpoint"))
-    val perTrigger = opts.getOrElse("files-per-trigger", "1").toInt
-    val nBuckets = opts.getOrElse("buckets", "16").toInt
-    val bucketOf = bucketSchemeOf(opts)
-    opts.get("trigger-ms") match {
-      case None =>
-        Streaming.startTriplesStreamMaterialized(spark, in, out, ckpt, gaz,
-          snapshot, perTrigger, nBuckets, Trigger.AvailableNow(), bucketOf)
-          .awaitTermination()
-        println(s"[submit] stream: drained $in into $out (checkpoint $ckpt)")
-      case Some(ms) =>
-        // Continuous mode: awaitTermination returns only on an external
-        // stop/kill (checkpoint resumes the feed position on re-invoke).
-        Streaming.startTriplesStreamMaterialized(spark, in, out, ckpt, gaz,
-          snapshot, perTrigger, nBuckets,
-          Trigger.ProcessingTime(ms.toLong, java.util.concurrent.TimeUnit.MILLISECONDS),
-          bucketOf)
-          .awaitTermination()
-        println(s"[submit] stream: stopped continuous ingest of $in into $out (checkpoint $ckpt)")
-    }
+    // Without --trigger-ms: drain what is available and exit. With it:
+    // continuous, so awaitTermination returns only on an external
+    // stop/kill (the checkpoint resumes the feed position on re-invoke).
+    val trigger = opts.get("trigger-ms").fold(Trigger.AvailableNow())(ms =>
+      Trigger.ProcessingTime(ms.toLong, java.util.concurrent.TimeUnit.MILLISECONDS))
+    Streaming.startTriplesStreamMaterialized(spark, in, out, ckpt, gaz, snapshot,
+      trigger = trigger,
+      maxFilesPerTrigger = opts.getOrElse("files-per-trigger", "1").toInt,
+      nBuckets = opts.getOrElse("buckets", "16").toInt,
+      bucketOf = bucketSchemeOf(opts))
+      .awaitTermination()
+    if (opts.contains("trigger-ms"))
+      println(s"[submit] stream: stopped continuous ingest of $in into $out (checkpoint $ckpt)")
+    else println(s"[submit] stream: drained $in into $out (checkpoint $ckpt)")
   }
 
   /** Incremental canon refresh over a delta page table — see the class doc.
@@ -248,27 +243,18 @@ object Submit {
         Extract.segments(Pages.fromParquet(spark, req(opts, "input"))),
         gazetteerOf(spark, opts)).toDF)
       .as[graft.model.Mention]
-    def done(v: Int): Boolean = SinkFs.exists(spark, s"$state/v$v/_DONE")
-    val versions = SinkFs.listPrefixed(spark, state, "v")
-      .flatMap(n => scala.util.Try(n.stripPrefix("v").toInt).toOption)
-    val cur = versions.filter(done).sorted.lastOption
-    val (st, how) = cur match {
-      case None => (Canon.canonicalState(ms), "full (initial)")
-      case Some(v) =>
-        val carried = Canon.CanonState(
-          spark.read.parquet(s"$state/v$v/stats"),
-          spark.read.parquet(s"$state/v$v/alias"))
-        val r = Canon.canonicalMapIncremental(carried, ms)
-        (r.state, if (r.fellBack) "full (cap-crossing fallback)" else "incremental")
+    val (next, how) = SinkFs.publishVersion(spark, state) { (carried, out) =>
+      val (st, how) = carried match {
+        case None => (Canon.canonicalState(ms), "full (initial)")
+        case Some(c) =>
+          val r = Canon.canonicalMapIncremental(Canon.CanonState(
+            spark.read.parquet(s"$c/stats"), spark.read.parquet(s"$c/alias")), ms)
+          (r.state, if (r.fellBack) "full (cap-crossing fallback)" else "incremental")
+      }
+      st.stats.write.mode("overwrite").parquet(s"$out/stats")
+      st.canonMap.write.mode("overwrite").parquet(s"$out/alias")
+      how
     }
-    val next = cur.map(_ + 1).getOrElse(0)
-    st.stats.write.mode("overwrite").parquet(s"$state/v$next/stats")
-    st.canonMap.write.mode("overwrite").parquet(s"$state/v$next/alias")
-    SinkFs.touch(spark, s"$state/v$next/_DONE")
-    // Keep the just-published version and its predecessor (manual rollback
-    // window); everything older — and any unflagged crash residue — goes.
-    versions.filter(v => cur.exists(_ > v) || !done(v))
-      .foreach(v => SinkFs.deleteLoud(spark, s"$state/v$v"))
     opts.get("canon-out").foreach(p =>
       spark.read.parquet(s"$state/v$next/alias").write.mode("overwrite").parquet(p))
     val n = spark.read.parquet(s"$state/v$next/alias").count()
@@ -290,26 +276,19 @@ object Submit {
     val dstats = org.apache.spark.sql.GraftSqlShims.localCheckpointFreshLazy(
       graft.dedup.Dedup.exact(
         spark.read.parquet(req(opts, "input")).select(col("doc_id"), col("text"))))
-    def done(v: Int): Boolean = SinkFs.exists(spark, s"$index/v$v/_DONE")
-    val versions = SinkFs.listPrefixed(spark, index, "v")
-      .flatMap(n => scala.util.Try(n.stripPrefix("v").toInt).toOption)
-    val cur = versions.filter(done).sorted.lastOption
-    val (folded, newDocs, how) = cur match {
-      case None =>
-        (dstats, dstats.select(col("h"), col("keeper").as("doc_id")), "initial")
-      case Some(v) =>
-        val idx = spark.read.parquet(s"$index/v$v/index")
-        (graft.dedup.Dedup.foldIndex(idx, dstats),
-          graft.dedup.Dedup.newAgainst(idx, dstats), "incremental")
+    val (next, how) = SinkFs.publishVersion(spark, index) { (carried, out) =>
+      val (folded, newDocs, how) = carried match {
+        case None =>
+          (dstats, dstats.select(col("h"), col("keeper").as("doc_id")), "initial")
+        case Some(c) =>
+          val idx = spark.read.parquet(s"$c/index")
+          (graft.dedup.Dedup.foldIndex(idx, dstats),
+            graft.dedup.Dedup.newAgainst(idx, dstats), "incremental")
+      }
+      folded.write.mode("overwrite").parquet(s"$out/index")
+      newDocs.write.mode("overwrite").parquet(s"$out/new_docs")
+      how
     }
-    val next = cur.map(_ + 1).getOrElse(0)
-    folded.write.mode("overwrite").parquet(s"$index/v$next/index")
-    newDocs.write.mode("overwrite").parquet(s"$index/v$next/new_docs")
-    SinkFs.touch(spark, s"$index/v$next/_DONE")
-    // Keep the published version and its predecessor; reclaim older and
-    // unflagged crash residue — same policy as refresh.
-    versions.filter(v => cur.exists(_ > v) || !done(v))
-      .foreach(v => SinkFs.deleteLoud(spark, s"$index/v$v"))
     val n = spark.read.parquet(s"$index/v$next/index").count()
     val nNew = spark.read.parquet(s"$index/v$next/new_docs").count()
     println(s"[submit] dedup: $how -> v$next ($n fingerprints, $nNew new docs)")

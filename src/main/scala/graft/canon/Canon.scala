@@ -57,16 +57,25 @@ object Canon {
       col("words").as("wa"), col("tok").as("tok_a"))
     val r = blockToks.select(col("surface").as("b"), col("sim_key").as("kb"),
       col("words").as("wb"), col("tok").as("tok_b"))
+    l.join(r, col("tok_a") === col("tok_b") && col("a") < col("b"))
+      .filter(similarPair)
+      .select(col("a"), col("b"))
+      .distinct()
+  }
+
+  /** The reference similarity predicate over a candidate pair's columns
+    * (`ka`/`kb` normalized keys, `wa`/`wb` word arrays): equal keys OR
+    * Levenshtein ratio > 0.79 OR word overlap ≥ 0.65. Symmetric in the
+    * pair, so either orientation verifies identically. Shared by token
+    * blocking ([[similarityEdges]]) and [[verifyEdges]]. */
+  private def similarPair: org.apache.spark.sql.Column = {
     val overlap = size(array_intersect(col("wa"), col("wb"))).cast("double") /
       greatest(size(col("wa")), size(col("wb"))).cast("double")
     val levRatio = lit(1.0) - levenshtein(col("ka"), col("kb")).cast("double") /
       greatest(length(col("ka")), length(col("kb"))).cast("double")
-    l.join(r, col("tok_a") === col("tok_b") && col("a") < col("b"))
-      .filter(col("ka") === col("kb") ||
-        levRatio > Config.LevRatioThreshold ||
-        overlap >= Config.WordOverlapThreshold)
-      .select(col("a"), col("b"))
-      .distinct()
+    col("ka") === col("kb") ||
+      levRatio > Config.LevRatioThreshold ||
+      overlap >= Config.WordOverlapThreshold
   }
 
   /** MinHash-banded similarity edges (the north-star scale path for
@@ -125,16 +134,10 @@ object Canon {
     */
   private def verifyEdges(cand: DataFrame, stats: DataFrame): DataFrame = {
     val dims = stats.select(col("surface"), col("sim_key"), col("words"))
-    val overlap = size(array_intersect(col("wa"), col("wb"))).cast("double") /
-      greatest(size(col("wa")), size(col("wb"))).cast("double")
-    val levRatio = lit(1.0) - levenshtein(col("ka"), col("kb")).cast("double") /
-      greatest(length(col("ka")), length(col("kb"))).cast("double")
     cand
       .join(dims.select(col("surface").as("a"), col("sim_key").as("ka"), col("words").as("wa")), "a")
       .join(dims.select(col("surface").as("b"), col("sim_key").as("kb"), col("words").as("wb")), "b")
-      .filter(col("ka") === col("kb") ||
-        levRatio > Config.LevRatioThreshold ||
-        overlap >= Config.WordOverlapThreshold)
+      .filter(similarPair)
       .select(col("a"), col("b"))
   }
 
@@ -828,8 +831,9 @@ object Canon {
     /** Content fingerprint of the alias map this snapshot carries
       * ([[aliasFingerprint]]), when known. The streaming sink records it
       * per batch so [[graft.streaming.Recanon]] can skip staleness scans
-      * of batches already current under the fresh map — None (the legacy
-      * Map-only entry points) means unversioned: always a scan candidate.
+      * of batches already current under the fresh map — None (a snapshot
+      * built without [[snapshotBounded]], or [[AliasNone]]) means
+      * unversioned: always a scan candidate.
       */
     def fp: Option[Long]
   }

@@ -23,110 +23,11 @@ import graft.model.{MetricRow, Triple}
   */
 object Materialize {
 
-  /** batch_id widened Int → Long in round 4 (streaming checkpoint batch ids
-    * are Long): a lineage sidecar written by a pre-widening binary holds
-    * INT32 batch_id files; [[migrateLineage]] performs the one-time rewrite,
-    * and [[readLineage]] runs it automatically (once per JVM per sidecar)
-    * before any read or append can hit the mixed-schema dir. */
+  /** One lineage row per bucket a sink append completed: the resume
+    * checkpoint of [[writeTriples]] (the batch sink's flat `_lineage` dir)
+    * and the per-micro-batch bucket counts of the streaming sink
+    * (`_lineage/batch-<id>`). */
   final case class LineageRow(table: String, bucket: Int, batch_id: Long, n_rows: Long)
-
-  // Sidecar dirs already footer-checked (and migrated if needed) this JVM —
-  // the check is driver-side parquet-footer reads, cheap for a
-  // dimension-sized sidecar but pointless to repeat on every resume lookup.
-  private val lineageVerified =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  private def lineagePartFiles(outDir: String): Seq[java.nio.file.Path] = {
-    val dir = java.nio.file.Paths.get(lineagePath(outDir))
-    if (!java.nio.file.Files.exists(dir)) Nil
-    else {
-      import scala.jdk.CollectionConverters._
-      val ls = java.nio.file.Files.list(dir)
-      try ls.iterator().asScala
-        .filter(_.getFileName.toString.endsWith(".parquet")).toList
-      finally ls.close()
-    }
-  }
-
-  /** Flat-sidecar part files whose footer carries the pre-widening INT32
-    * batch_id. Driver-side footer reads only — zero Spark jobs. (The
-    * streaming sink's per-batch sidecar dirs postdate the widening and are
-    * batch-scoped OVERWRITE, so only this flat append-mode layout can mix
-    * schemas.) */
-  private def int32LineageFiles(outDir: String): Seq[java.nio.file.Path] = {
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-    val conf = new org.apache.hadoop.conf.Configuration()
-    lineagePartFiles(outDir).filter { p =>
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(p.toString), conf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try {
-        val schema = r.getFooter.getFileMetaData.getSchema
-        schema.containsField("batch_id") && {
-          val t = schema.getType(schema.getFieldIndex("batch_id"))
-          t.isPrimitive &&
-            t.asPrimitiveType().getPrimitiveTypeName == PrimitiveTypeName.INT32
-        }
-      } finally r.close()
-    }
-  }
-
-  /** One-time migration of a pre-round-4 lineage sidecar: rewrites every
-    * part file with batch_id widened INT32 → INT64 so the dir reads under
-    * one schema again. No-op (returns false) when the sidecar is absent or
-    * already uniformly Long. Each part file is read under its OWN footer
-    * schema (a dir-level read of the mixed dir is exactly what fails), so
-    * old and new files coexist safely during the rewrite. The swap keeps a
-    * full backup until the new dir is live: live → `_lineage.pre_migration`,
-    * rewritten → live, backup deleted — a crash mid-swap leaves either the
-    * original or the migrated dir complete, never a torn one.
-    */
-  def migrateLineage(spark: SparkSession, outDir: String): Boolean = {
-    recoverLineageSwap(outDir)
-    if (int32LineageFiles(outDir).isEmpty) return false
-    val widened = lineagePartFiles(outDir)
-      .map(p => spark.read.parquet(p.toString)
-        .withColumn("batch_id", col("batch_id").cast("long"))
-        .select(col("table"), col("bucket"), col("batch_id"), col("n_rows")))
-      .reduce(_.unionByName(_))
-    val live = java.nio.file.Paths.get(lineagePath(outDir))
-    val staged = java.nio.file.Paths.get(lineagePath(outDir) + ".migrated")
-    val backup = java.nio.file.Paths.get(lineagePath(outDir) + ".pre_migration")
-    graft.util.TempDirs.delete(staged)
-    widened.write.mode("overwrite").parquet(staged.toString)
-    graft.util.TempDirs.delete(backup)
-    java.nio.file.Files.move(live, backup)
-    java.nio.file.Files.move(staged, live)
-    graft.util.TempDirs.delete(backup)
-    true
-  }
-
-  /** Heal an interrupted [[migrateLineage]] swap so no crash window leaves
-    * the sink without a live `_lineage` dir (an absent sidecar reads as
-    * "nothing done" and a resume would re-append every completed bucket).
-    * The swap's invariant makes recovery unambiguous: `live` is only moved
-    * aside AFTER `.migrated` is fully written, so live-absent ⇒ the staged
-    * dir is complete — promote it; the `.pre_migration` backup is the
-    * fallback if the staged dir is somehow gone too. With `live` present,
-    * leftovers are just debris from a completed (or abandoned-before-move)
-    * attempt and are deleted so the next attempt starts clean.
-    */
-  private def recoverLineageSwap(outDir: String): Unit = {
-    val live = java.nio.file.Paths.get(lineagePath(outDir))
-    val staged = java.nio.file.Paths.get(lineagePath(outDir) + ".migrated")
-    val backup = java.nio.file.Paths.get(lineagePath(outDir) + ".pre_migration")
-    if (!java.nio.file.Files.exists(live)) {
-      if (java.nio.file.Files.exists(staged)) {
-        java.nio.file.Files.move(staged, live)
-        graft.util.TempDirs.delete(backup)
-      } else if (java.nio.file.Files.exists(backup)) {
-        java.nio.file.Files.move(backup, live)
-      }
-    } else {
-      graft.util.TempDirs.delete(staged)
-      graft.util.TempDirs.delete(backup)
-    }
-  }
 
   /** Deterministic bucket of a page url. In the sandbox corpus the doc id is
     * embedded in the url path, so bucketing is reproducible in the DuckDB
@@ -150,26 +51,15 @@ object Materialize {
 
   def lineagePath(outDir: String) = s"$outDir/_lineage"
 
-  def readLineage(spark: SparkSession, outDir: String): DataFrame = {
-    import spark.implicits._
-    val p = java.nio.file.Paths.get(lineagePath(outDir))
-    // A missing dir may be an interrupted migration swap, not a fresh sink —
-    // heal BEFORE the exists check, or a resume sees "nothing done" and
-    // re-appends every completed bucket.
-    if (!java.nio.file.Files.exists(p)) recoverLineageSwap(outDir)
-    if (java.nio.file.Files.exists(p)) {
-      // Resuming a pre-widening sink: widen any INT32 batch_id files ONCE
-      // before this dir is read (or appended to) under the Long schema.
-      // Marked verified only AFTER the migration succeeds: a transient
-      // failure must be retried on the next read, not skipped for the
-      // rest of the JVM with the dir still mixed-schema.
-      if (!lineageVerified.contains(lineagePath(outDir))) {
-        migrateLineage(spark, outDir)
-        lineageVerified.add(lineagePath(outDir))
-      }
-      spark.read.parquet(lineagePath(outDir))
-    } else spark.emptyDataset[LineageRow].toDF()
-  }
+  /** The lineage sidecar, probed and read through the sink's own Hadoop
+    * filesystem, so a URI sink (file://, s3a://, hdfs://) resumes like a
+    * plain path. An absent sidecar is a fresh sink: nothing done. */
+  def readLineage(spark: SparkSession, outDir: String): DataFrame =
+    if (graft.util.SinkFs.exists(spark, lineagePath(outDir))) spark.read.parquet(lineagePath(outDir))
+    else {
+      import spark.implicits._
+      spark.emptyDataset[LineageRow].toDF()
+    }
 
   /** Buckets already completed for `table` (the checkpoint state). */
   def doneBuckets(spark: SparkSession, outDir: String, table: String): Set[Int] = {
@@ -178,17 +68,6 @@ object Materialize {
       .select(col("bucket")).as[Int].collect().toSet
   }
 
-  /** Materialize `triples` into `outDir/<table>` partitioned by bucket,
-    * skipping buckets recorded in the lineage table (resume semantics).
-    * Returns the per-bucket row counts written this invocation.
-    *
-    * Scale shape: ONE job writes all pending buckets (partitionBy on the
-    * bucket column — no per-bucket driver loop, which at 10^12 docs would be
-    * thousands of sequential jobs); the bucket column is derived, so the
-    * write is narrow on top of the triple pipeline. Row counts per bucket
-    * come from `observe`-style aggregation of the written data, one extra
-    * columnar count over the (already shuffled) output.
-    */
   /** The nBuckets conditional-sum aggregate columns that ride a write job
     * via observe() — shared by the batch and streaming sinks so the bucket
     * accounting cannot diverge between them. */
@@ -206,6 +85,17 @@ object Materialize {
       }
     }
 
+  /** Materialize `triples` into `outDir/<table>` partitioned by bucket,
+    * skipping buckets recorded in the lineage table (resume semantics).
+    * Returns the per-bucket row counts written this invocation.
+    *
+    * Scale shape: ONE job writes all pending buckets (partitionBy on the
+    * bucket column — no per-bucket driver loop, which at 10^12 docs would be
+    * thousands of sequential jobs); the bucket column is derived, so the
+    * write is narrow on top of the triple pipeline. Row counts per bucket
+    * come from `observe`-style aggregation of the written data, one extra
+    * columnar count over the (already shuffled) output.
+    */
   def writeTriples(triples: Dataset[Triple], outDir: String, table: String = "triples",
       nBuckets: Int = 16, batchId: Long = 0L,
       bucketOf: Int => org.apache.spark.sql.Column = bucketCol): Seq[LineageRow] = {

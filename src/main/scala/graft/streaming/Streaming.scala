@@ -1,11 +1,13 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.expressions.Window
+import graft.canon.Canon.{AliasFrame, AliasMap, AliasNone, AliasSnapshot}
 import graft.model.{Mention, Page, Segment, Triple}
 import graft.extract.Extract
+import graft.materialize.Materialize
 import graft.mentions.{AhoCorasick, Mentions}
 import graft.relations.Relations
 
@@ -13,7 +15,8 @@ import graft.relations.Relations
   * §2.9); these operators are the forward path for streaming ingest: a
   * tumbling-window aggregate, gap-based sessionization, and — the flagship
   * itself — the pages→triples KG-construction flow as an incremental
-  * Structured Streaming job ([[pageTriples]]/[[triplesStream]]), each with a
+  * Structured Streaming job ([[pageTriples]] through the one entry point
+  * [[startTriplesStreamMaterialized]]), each with a
   * batch-equivalent used by the DuckDB oracle (identical semantics, so the
   * streaming run is verified against the batch result in tests).
   */
@@ -178,66 +181,6 @@ object Streaming {
     df.filter(col("pred") =!= Relations.ProvPred).unionByName(prov).as[Triple]
   }
 
-  /** Streaming form of the flagship: readStream over a parquet directory of
-    * pages (the file-source stand-in for a Kafka/WARC feed), through
-    * [[pageTriples]]. Append-mode, watermark-free (the plan is stateless),
-    * exactly-once with a file sink + checkpointLocation. `maxFilesPerTrigger`
-    * bounds micro-batch size — backpressure for a bursty source. Inherits
-    * [[pageTriples]]'s unique-url feed precondition.
-    */
-  def triplesStream(spark: SparkSession, pagesDir: String,
-      gazetteer: Array[(String, String)], canonSnapshot: Map[String, String],
-      maxFilesPerTrigger: Int = 1, rebalance: Boolean = false): Dataset[Triple] =
-    pageTriples(pagesStream(spark, pagesDir, maxFilesPerTrigger, rebalance),
-      gazetteer, canonSnapshot)
-
-  /** The feed source, shared by every streaming entry point (the AliasMap
-    * and AliasFrame shapes must read the feed IDENTICALLY or the
-    * "both branches produce the same sink" contract can drift).
-    *
-    * `rebalance` inserts one repartition(defaultParallelism) right after
-    * the source — guide §2.5's remedy for a COARSE feed (few small files ×
-    * maxFilesPerTrigger=1 means each micro-batch arrives as one split, and
-    * the expensive per-page fused stage then runs on one core while the
-    * rest idle; measured 0.33 s single-task batches on the staged bench
-    * feed). OFF by default: a production feed with well-split files gets
-    * its parallelism from the source, and rebalancing there would shuffle
-    * the full page payload for nothing. Page rows move whole, so the
-    * per-page computation and page-local dedup are unaffected.
-    */
-  private def pagesStream(spark: SparkSession, pagesDir: String,
-      maxFilesPerTrigger: Int, rebalance: Boolean = false): Dataset[Page] = {
-    import spark.implicits._
-    val src = spark.readStream
-      .schema(Encoders.product[Page].schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(pagesDir)
-      .as[Page]
-    if (rebalance) src.repartition(spark.sparkContext.defaultParallelism) else src
-  }
-
-  /** Drain everything currently available in `pagesDir` into a parquet sink
-    * exactly once, then stop (Trigger.AvailableNow — still micro-batched by
-    * `maxFilesPerTrigger`). Re-invoking with the same checkpoint + sink after
-    * new files land resumes from the checkpoint: already-processed files are
-    * skipped and half-written batches are rolled forward, which StreamingSpec
-    * verifies by killing and resuming a run mid-input (the north rule's
-    * "resumable from checkpoint", streaming dimension).
-    */
-  def runTriplesStreamOnce(spark: SparkSession, pagesDir: String, outDir: String,
-      checkpointDir: String, gazetteer: Array[(String, String)],
-      canonSnapshot: Map[String, String], maxFilesPerTrigger: Int = 1): Unit = {
-    val q = triplesStream(spark, pagesDir, gazetteer, canonSnapshot, maxFilesPerTrigger)
-      .writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
-
   /** Materialized streaming sink: the north rule's "partitioned tables with
     * per-partition lineage and metric rows for checkpoint resume", streaming
     * dimension. Each micro-batch writes
@@ -259,10 +202,9 @@ object Streaming {
     * ids × batch-scoped overwrite.
     */
   def materializedBatchWriter(outDir: String, nBuckets: Int = 16,
-      bucketOf: Int => org.apache.spark.sql.Column = graft.materialize.Materialize.bucketCol,
+      bucketOf: Int => Column = Materialize.bucketCol,
       aliasFp: Option[Long] = None)(
       batch: Dataset[Triple], batchId: Long): Unit = {
-    import graft.materialize.Materialize
     val t0 = System.nanoTime()
     val obs = org.apache.spark.sql.Observation()
     // total (a plain count) and the per-bucket conditional sums are
@@ -333,10 +275,10 @@ object Streaming {
     // Recanon can skip the staleness scan of batches already current under
     // a fresh map — steady-state compaction becomes metadata-only instead
     // of a full-history provenance scan per canon cadence. Unversioned
-    // (None — legacy Map-only entry points, or AliasNone raw drains) writes
-    // nothing: the batch stays a permanent scan candidate, which is the
-    // safe direction. Overwrite/delete keeps the at-least-once replay
-    // contract, same as the other two sidecars.
+    // (None — a snapshot built without a fingerprint, or an AliasNone raw
+    // drain) writes nothing: the batch stays a permanent scan candidate,
+    // which is the safe direction. Overwrite/delete keeps the at-least-once
+    // replay contract, same as the other two sidecars.
     val writeAlias: () => Unit = () => aliasFp match {
       case Some(f) =>
         Seq((batchId, f)).toDF("batch_id", "alias_fp")
@@ -347,57 +289,51 @@ object Streaming {
     graft.util.Par.run(Seq(writeLineage, writeMetrics, writeAlias))(_.apply())
   }
 
-  /** [[runTriplesStreamOnce]] with the materialized sink: same AvailableNow
-    * drain + checkpoint resume, but through [[materializedBatchWriter]] so
-    * the output is the partitioned table + lineage + metrics sidecars.
+  /** The streaming flagship, the one entry point: readStream over a parquet
+    * directory of pages (the file-source stand-in for a Kafka/WARC feed)
+    * → the fused stage → [[materializedBatchWriter]], returning the live
+    * query. The default trigger drains what is available and stops
+    * (Trigger.AvailableNow, still micro-batched by `maxFilesPerTrigger`,
+    * the backpressure bound for a bursty source); callers that drain call
+    * `.awaitTermination()`. A ProcessingTime trigger keeps the query
+    * running while files land, and the caller decides when to stop it.
+    * Re-invoking with the same checkpoint + sink after new files land
+    * resumes: processed files are skipped and a replayed batch overwrites
+    * its own batch-scoped dirs (StreamingSpec kills and resumes a drain
+    * mid-input). Inherits [[pageTriples]]'s unique-url feed precondition.
+    *
+    * The snapshot picks where provenance is canonicalized
+    * ([[graft.canon.Canon.snapshotBounded]] chooses): AliasMap rewrites it
+    * inside the fused map-only stage; AliasFrame defers it to a
+    * per-micro-batch [[rewriteProv]] join, keeping the job runnable when
+    * the alias dimension is too large to driver-collect; AliasNone leaves
+    * raw surfaces for a later [[Recanon.recanonicalize]]. AliasMap and
+    * AliasFrame produce identical sink contents (StreamingSpec pins it).
+    * `bucketOf` picks the sink's bucket scheme (doc-id for the oracle
+    * surfaces, url-hash for arbitrary production urls —
+    * [[graft.materialize.Materialize.hashBucketCol]]).
+    *
     * Readers: `spark.read.parquet(s"$outDir/triples")` (batch_id and bucket
     * come back as partition columns); sidecars are read with a one-level
-    * glob over the batch dirs (dollar-outDir/_lineage/ star — spelled out
-    * because a literal star-after-slash opens a nested Scala comment here).
-    */
-  /** Start the materialized flagship stream with a caller-chosen trigger
-    * and return the live query (no await): the feeder-paced benchmark shape
-    * — files land in `pagesDir` WHILE the query runs on a ProcessingTime
-    * cadence, and the caller decides when the feed is drained and stops it.
-    * Same fused stage, sink, and sidecar contract as
-    * [[runTriplesStreamMaterialized]].
+    * glob over the batch dirs, `$outDir/_lineage/` followed by a star.
     */
   def startTriplesStreamMaterialized(spark: SparkSession, pagesDir: String,
       outDir: String, checkpointDir: String, gazetteer: Array[(String, String)],
-      canonSnapshot: Map[String, String], maxFilesPerTrigger: Int,
-      nBuckets: Int, trigger: Trigger): org.apache.spark.sql.streaming.StreamingQuery =
-    startTriplesStreamMaterialized(spark, pagesDir, outDir, checkpointDir,
-      gazetteer, graft.canon.Canon.AliasMap(canonSnapshot), maxFilesPerTrigger,
-      nBuckets, trigger)
-
-  /** [[startTriplesStreamMaterialized]] over either [[graft.canon.Canon
-    * .AliasSnapshot]] shape (use [[graft.canon.Canon.snapshotBounded]] to
-    * pick): AliasMap rewrites provenance inside the fused map-only stage;
-    * AliasFrame defers it to a per-micro-batch [[rewriteProv]] join in
-    * foreachBatch, keeping the job runnable when the alias dimension is too
-    * large to driver-collect. Both shapes produce identical sink contents
-    * (StreamingSpec pins the equivalence). `bucketOf` picks the sink's
-    * bucket scheme (doc-id for the oracle surfaces, url-hash for arbitrary
-    * production urls — [[graft.materialize.Materialize.hashBucketCol]]).
-    */
-  def startTriplesStreamMaterialized(spark: SparkSession, pagesDir: String,
-      outDir: String, checkpointDir: String, gazetteer: Array[(String, String)],
-      snapshot: graft.canon.Canon.AliasSnapshot, maxFilesPerTrigger: Int,
-      nBuckets: Int, trigger: Trigger,
-      bucketOf: Int => org.apache.spark.sql.Column = graft.materialize.Materialize.bucketCol,
-      rebalance: Boolean = false)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.canon.Canon.{AliasFrame, AliasMap, AliasNone}
+      snapshot: AliasSnapshot, trigger: Trigger = Trigger.AvailableNow(),
+      maxFilesPerTrigger: Int = 1, nBuckets: Int = 16,
+      bucketOf: Int => Column = Materialize.bucketCol): StreamingQuery = {
+    val pages = spark.readStream
+      .schema(Encoders.product[Page].schema)
+      .option("maxFilesPerTrigger", maxFilesPerTrigger)
+      .parquet(pagesDir)
+      .as(Encoders.product[Page])
     val (stream, rewrite) = snapshot match {
       case AliasMap(m, _) =>
-        (triplesStream(spark, pagesDir, gazetteer, m, maxFilesPerTrigger, rebalance),
-          identity[Dataset[Triple]] _)
+        (pageTriples(pages, gazetteer, m), identity[Dataset[Triple]] _)
       case AliasFrame(df, _) =>
-        (pageTriplesRaw(pagesStream(spark, pagesDir, maxFilesPerTrigger, rebalance), gazetteer),
-          (b: Dataset[Triple]) => rewriteProv(b, df))
+        (pageTriplesRaw(pages, gazetteer), (b: Dataset[Triple]) => rewriteProv(b, df))
       case AliasNone =>
-        (pageTriplesRaw(pagesStream(spark, pagesDir, maxFilesPerTrigger, rebalance), gazetteer),
-          identity[Dataset[Triple]] _)
+        (pageTriplesRaw(pages, gazetteer), identity[Dataset[Triple]] _)
     }
     stream
       .writeStream
@@ -408,52 +344,6 @@ object Streaming {
         materializedBatchWriter(outDir, nBuckets, bucketOf, snapshot.fp)(rewrite(b), id))
       .start()
   }
-
-  def runTriplesStreamMaterialized(spark: SparkSession, pagesDir: String,
-      outDir: String, checkpointDir: String, gazetteer: Array[(String, String)],
-      canonSnapshot: Map[String, String], maxFilesPerTrigger: Int = 1,
-      nBuckets: Int = 16, rebalance: Boolean = false): Unit =
-    runTriplesStreamMaterialized(spark, pagesDir, outDir, checkpointDir,
-      gazetteer, graft.canon.Canon.AliasMap(canonSnapshot), maxFilesPerTrigger,
-      nBuckets, rebalance)
-
-  /** [[runTriplesStreamMaterialized]] over an [[graft.canon.Canon
-    * .AliasSnapshot]]: drain everything available (AvailableNow) through the
-    * snapshot-shaped start entry point and block until done.
-    */
-  def runTriplesStreamMaterialized(spark: SparkSession, pagesDir: String,
-      outDir: String, checkpointDir: String, gazetteer: Array[(String, String)],
-      snapshot: graft.canon.Canon.AliasSnapshot, maxFilesPerTrigger: Int,
-      nBuckets: Int,
-      bucketOf: Int => org.apache.spark.sql.Column,
-      rebalance: Boolean): Unit =
-    startTriplesStreamMaterialized(spark, pagesDir, outDir, checkpointDir,
-      gazetteer, snapshot, maxFilesPerTrigger, nBuckets,
-      Trigger.AvailableNow(), bucketOf, rebalance).awaitTermination()
-
-  def runTriplesStreamMaterialized(spark: SparkSession, pagesDir: String,
-      outDir: String, checkpointDir: String, gazetteer: Array[(String, String)],
-      snapshot: graft.canon.Canon.AliasSnapshot, maxFilesPerTrigger: Int,
-      nBuckets: Int,
-      bucketOf: Int => org.apache.spark.sql.Column): Unit =
-    runTriplesStreamMaterialized(spark, pagesDir, outDir, checkpointDir,
-      gazetteer, snapshot, maxFilesPerTrigger, nBuckets, bucketOf,
-      rebalance = false)
-
-  def runTriplesStreamMaterialized(spark: SparkSession, pagesDir: String,
-      outDir: String, checkpointDir: String, gazetteer: Array[(String, String)],
-      snapshot: graft.canon.Canon.AliasSnapshot, maxFilesPerTrigger: Int,
-      nBuckets: Int, rebalance: Boolean): Unit =
-    runTriplesStreamMaterialized(spark, pagesDir, outDir, checkpointDir,
-      gazetteer, snapshot, maxFilesPerTrigger, nBuckets,
-      graft.materialize.Materialize.bucketCol, rebalance)
-
-  def runTriplesStreamMaterialized(spark: SparkSession, pagesDir: String,
-      outDir: String, checkpointDir: String, gazetteer: Array[(String, String)],
-      snapshot: graft.canon.Canon.AliasSnapshot, maxFilesPerTrigger: Int,
-      nBuckets: Int): Unit =
-    runTriplesStreamMaterialized(spark, pagesDir, outDir, checkpointDir,
-      gazetteer, snapshot, maxFilesPerTrigger, nBuckets, rebalance = false)
 
   final case class SessState(nEvents: Long, nSessions: Long, lastTs: Long)
 

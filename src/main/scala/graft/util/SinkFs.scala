@@ -49,4 +49,26 @@ object SinkFs {
     if (f.exists(hp) && !f.delete(hp, true))
       throw new IllegalStateException(s"failed to delete sink path $p")
   }
+
+  /** The `_DONE` version discipline of a carried-state dir: versions are
+    * `dir/v<N>/` subdirs, each published by a `_DONE` flag. Lists the
+    * versions, picks the newest flagged one as the carried state, lets
+    * `write(carried, next)` fill the next version's dir (both given as
+    * paths), publishes it with `_DONE`, then reclaims every version older
+    * than the carried one and every unflagged dir (crash residue). The
+    * carried version stays as the manual rollback window. Returns the
+    * published version number and `write`'s result. */
+  def publishVersion[A](spark: SparkSession, dir: String)(
+      write: (Option[String], String) => A): (Int, A) = {
+    def done(v: Int): Boolean = exists(spark, s"$dir/v$v/_DONE")
+    val versions = listPrefixed(spark, dir, "v")
+      .flatMap(n => scala.util.Try(n.stripPrefix("v").toInt).toOption)
+    val cur = versions.filter(done).sorted.lastOption
+    val next = cur.map(_ + 1).getOrElse(0)
+    val result = write(cur.map(v => s"$dir/v$v"), s"$dir/v$next")
+    touch(spark, s"$dir/v$next/_DONE")
+    versions.filter(v => cur.exists(_ > v) || !done(v))
+      .foreach(v => deleteLoud(spark, s"$dir/v$v"))
+    (next, result)
+  }
 }

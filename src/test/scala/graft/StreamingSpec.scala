@@ -1,5 +1,6 @@
 package graft
 
+import graft.canon.Canon.AliasMap
 import graft.streaming.Streaming
 
 class StreamingSpec extends SparkSpec {
@@ -67,8 +68,11 @@ class StreamingSpec extends SparkSpec {
     val tmp = java.nio.file.Files.createTempDirectory("graft-stream-flagship-spec")
     val in = s"$tmp/pages"; val out = s"$tmp/sink"; val ckpt = s"$tmp/ckpt"
     pages.repartition(4).write.parquet(in)
-    Streaming.runTriplesStreamOnce(spark, in, out, ckpt, gaz, canon, maxFilesPerTrigger = 1)
-    val streamed = spark.read.parquet(out).as[graft.model.Triple].collect()
+    Streaming.startTriplesStreamMaterialized(spark, in, out, ckpt, gaz, AliasMap(canon),
+      maxFilesPerTrigger = 1).awaitTermination()
+    val streamed = spark.read.parquet(s"$out/triples")
+      .select("subj", "pred", "obj", "url", "score")
+      .as[graft.model.Triple].collect()
     assert(grouped(streamed) == grouped(batch.collect()))
     // maxFilesPerTrigger=1 over a 4-file feed: the run must have been
     // genuinely incremental, not one monolithic batch.
@@ -91,13 +95,17 @@ class StreamingSpec extends SparkSpec {
     }
     // First run sees only half the corpus, drains it, and stops.
     feed(parts.take(2))
-    Streaming.runTriplesStreamOnce(spark, in, out, ckpt, gaz, canon)
-    val partial = spark.read.parquet(out).count()
+    Streaming.startTriplesStreamMaterialized(spark, in, out, ckpt, gaz, AliasMap(canon))
+      .awaitTermination()
+    val partial = spark.read.parquet(s"$out/triples").count()
     // The rest of the corpus lands; the SAME checkpoint + sink resumes:
     // already-committed batches must be skipped (no dupes), new files drained.
     feed(parts.drop(2))
-    Streaming.runTriplesStreamOnce(spark, in, out, ckpt, gaz, canon)
-    val streamed = spark.read.parquet(out).as[graft.model.Triple].collect()
+    Streaming.startTriplesStreamMaterialized(spark, in, out, ckpt, gaz, AliasMap(canon))
+      .awaitTermination()
+    val streamed = spark.read.parquet(s"$out/triples")
+      .select("subj", "pred", "obj", "url", "score")
+      .as[graft.model.Triple].collect()
     val expected = grouped(batch.collect())
     assert(partial < streamed.length, "first drain should be a strict subset")
     assert(grouped(streamed) == expected)
@@ -122,8 +130,8 @@ class StreamingSpec extends SparkSpec {
     val tmp = java.nio.file.Files.createTempDirectory("graft-stream-frame-spec")
     val in = s"$tmp/pages"; val out = s"$tmp/sink"; val ckpt = s"$tmp/ckpt"
     pages.repartition(4).write.parquet(in)
-    Streaming.runTriplesStreamMaterialized(spark, in, out, ckpt, gaz, snap,
-      maxFilesPerTrigger = 1, nBuckets = 16)
+    Streaming.startTriplesStreamMaterialized(spark, in, out, ckpt, gaz, snap,
+      maxFilesPerTrigger = 1, nBuckets = 16).awaitTermination()
     val streamed = spark.read.parquet(s"$out/triples")
       .select("subj", "pred", "obj", "url", "score")
       .as[graft.model.Triple].collect()
@@ -151,7 +159,7 @@ class StreamingSpec extends SparkSpec {
     spark.streams.addListener(listener)
     try {
       val q = Streaming.startTriplesStreamMaterialized(spark, in, out, ckpt,
-        gaz, canon, maxFilesPerTrigger = 1, nBuckets = 16,
+        gaz, AliasMap(canon), maxFilesPerTrigger = 1, nBuckets = 16,
         trigger = Trigger.ProcessingTime(50L))
       // Feed files one at a time WHILE the query runs (the paced-bench
       // shape); land atomically (hidden temp name + rename) so a trigger
@@ -187,12 +195,14 @@ class StreamingSpec extends SparkSpec {
     pages.repartition(4).write.parquet(in)
     // Drain under a deliberately STALE snapshot: identity over all surfaces.
     val staleSnap = canon.keysIterator.map(k => k -> k).toMap
-    Streaming.runTriplesStreamMaterialized(spark, in, out, ckpt, gaz, staleSnap)
+    Streaming.startTriplesStreamMaterialized(spark, in, out, ckpt, gaz, AliasMap(staleSnap))
+      .awaitTermination()
     val allBatches = spark.read.parquet(s"$out/triples")
       .select(col("batch_id").cast("long")).distinct().as[Long].collect().toSet
 
-    // Compact with the fresh map → table equals the batch flagship. The
-    // Map-overload drain is UNVERSIONED, so every batch is a scan candidate.
+    // Compact with the fresh map → table equals the batch flagship. A
+    // snapshot without a fingerprint drains UNVERSIONED, so every batch is
+    // a scan candidate.
     val report = Recanon.recanonicalize(spark, out, canonDf)
     assert(report.batchesRewritten.nonEmpty)
     assert(report.batchesScanned.toSet == allBatches)
@@ -254,7 +264,8 @@ class StreamingSpec extends SparkSpec {
     // per-batch watermark at drain time.
     val snap = graft.canon.Canon.snapshotBounded(canonDf)
     assert(snap.fp.isDefined)
-    Streaming.runTriplesStreamMaterialized(spark, in, out, ckpt, gaz, snap, 1, 16)
+    Streaming.startTriplesStreamMaterialized(spark, in, out, ckpt, gaz, snap)
+      .awaitTermination()
     val aliasMarks = new java.io.File(s"$out/_alias").list()
       .count(_.startsWith("batch-"))
     assert(aliasMarks >= 2, s"expected per-batch alias marks, got $aliasMarks")
@@ -282,7 +293,8 @@ class StreamingSpec extends SparkSpec {
     val tmp = java.nio.file.Files.createTempDirectory("graft-repair-spec")
     val in = s"$tmp/pages"; val out = s"$tmp/sink"; val ckpt = s"$tmp/ckpt"
     pages.repartition(2).write.parquet(in)
-    Streaming.runTriplesStreamMaterialized(spark, in, out, ckpt, gaz, canon)
+    Streaming.startTriplesStreamMaterialized(spark, in, out, ckpt, gaz, AliasMap(canon))
+      .awaitTermination()
     val nTable = spark.read.parquet(s"$out/triples").count()
     // Simulate the crash window: one batch's lineage sidecar vanishes.
     val victims = new java.io.File(s"$out/_lineage").listFiles()
@@ -312,11 +324,13 @@ class StreamingSpec extends SparkSpec {
     }
     // Drain half, then resume over the rest with the same checkpoint.
     feed(parts.take(2))
-    Streaming.runTriplesStreamMaterialized(spark, in, out, ckpt, gaz, canon)
+    Streaming.startTriplesStreamMaterialized(spark, in, out, ckpt, gaz, AliasMap(canon))
+      .awaitTermination()
     val batchIdsAfterHalf = spark.read.parquet(s"$out/triples")
       .select("batch_id").distinct().collect().map(_.getInt(0)).toSet
     feed(parts.drop(2))
-    Streaming.runTriplesStreamMaterialized(spark, in, out, ckpt, gaz, canon)
+    Streaming.startTriplesStreamMaterialized(spark, in, out, ckpt, gaz, AliasMap(canon))
+      .awaitTermination()
 
     // Table contents == batch flagship (partition cols dropped for compare).
     val table = spark.read.parquet(s"$out/triples")

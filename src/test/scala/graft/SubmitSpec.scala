@@ -34,20 +34,25 @@ class SubmitSpec extends SparkSpec {
       .select("subj", "pred", "obj", "url", "score"))
 
   test("submit batch materializes the flagship triples with hash-bucket lineage, and resumes as a no-op") {
-    val out = scratch("graft-submit-batch")
-    Submit.run(spark, Array("batch", "--input", pagesDir, "--output", out))
-    assert(sinkChecksum(out) == batchChecksum)
-    val lineage = spark.read.parquet(s"$out/_lineage")
-    val nTable = spark.read.parquet(s"$out/triples").count()
-    assert(lineage.agg(sum("n_rows")).head.getLong(0) == nTable)
-    // hash buckets are in range and the partition dirs agree with lineage
-    val buckets = lineage.select("bucket").as[Int].collect().toSet
-    assert(buckets.forall(b => b >= 0 && b < 16))
-    // resume: a second run finds every bucket done and writes nothing
-    val lineageRowsBefore = lineage.count()
-    Submit.run(spark, Array("batch", "--input", pagesDir, "--output", out))
-    assert(spark.read.parquet(s"$out/triples").count() == nTable)
-    assert(spark.read.parquet(s"$out/_lineage").count() == lineageRowsBefore)
+    // The sink named as a plain path and as a file:// URI (the form an
+    // s3a:// or hdfs:// sink takes): the resume must find the lineage
+    // through the sink's own filesystem either way.
+    val dir = scratch("graft-submit-batch")
+    Seq(s"$dir/plain", s"file://$dir/uri").foreach { out =>
+      Submit.run(spark, Array("batch", "--input", pagesDir, "--output", out))
+      assert(sinkChecksum(out) == batchChecksum)
+      val lineage = spark.read.parquet(s"$out/_lineage")
+      val nTable = spark.read.parquet(s"$out/triples").count()
+      assert(lineage.agg(sum("n_rows")).head.getLong(0) == nTable)
+      // hash buckets are in range and the partition dirs agree with lineage
+      val buckets = lineage.select("bucket").as[Int].collect().toSet
+      assert(buckets.forall(b => b >= 0 && b < 16))
+      // resume: a second run finds every bucket done and writes nothing
+      val lineageRowsBefore = lineage.count()
+      Submit.run(spark, Array("batch", "--input", pagesDir, "--output", out))
+      assert(spark.read.parquet(s"$out/triples").count() == nTable, s"resume into $out")
+      assert(spark.read.parquet(s"$out/_lineage").count() == lineageRowsBefore, s"resume into $out")
+    }
   }
 
   /** Spark jobs started while `body` runs. */
